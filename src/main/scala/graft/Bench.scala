@@ -9,49 +9,60 @@ import org.apache.spark.sql.SparkSession
   * prune the compute down to a row count and would overstate throughput.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores, not a fixed small number: a
-    // forgotten SPARK_GRAFT_CPUS must not silently produce 4-core
-    // numbers that read as query regressions (round-5 lesson)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // STATIC conf (builder-only): the generated-class cache defaults
-      // to 100 entries, but one interleaved pass over all ~46 declared
-      // queries compiles several codegen units each — by the time pass
-      // 2 reaches a query, pass 1's classes are evicted and EVERY timed
-      // sample re-pays Janino compilation (~40% uniform inflation,
-      // round-4 finding). A deployment reuses compiled plans;
-      // steady-state query cost is what this harness reports.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    Engine.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    def runOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean = {
-      val ok =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          true
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            false
-        }
-      // the dedup pipelines register their cache blocks with
-      // PipelineCaches — release them via the documented lifetime API
-      // (CacheLifetimeSpec pins that this leaves no stale blocks), so a
-      // second timed run is never served from the CacheManager. The
-      // clearCache sweep stays as a guard for anything cached outside
-      // the pipelines' registry (e.g. cross-session cached-plan matches).
-      graft.ops.PipelineCaches.release(spark)
-      spark.sharedState.cacheManager.clearCache()
-      ok
+  /** The dataset the timing mains (Bench, Profile, CacheAudit) read. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** One run of a declared query: materialize it through the noop sink,
+    * then release its caches. False (and a stderr line) on failure. */
+  def runOne(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean = {
+    val ok =
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        true
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          false
+      }
+    // the dedup pipelines register their cache blocks with
+    // PipelineCaches — release them via the documented lifetime API
+    // (CacheLifetimeSpec pins that this leaves no stale blocks), so a
+    // second timed run is never served from the CacheManager. The
+    // clearCache sweep stays as a guard for anything cached outside
+    // the pipelines' registry (e.g. cross-session cached-plan matches).
+    graft.ops.PipelineCaches.release(spark)
+    spark.sharedState.cacheManager.clearCache()
+    ok
+  }
+
+  /** Machine-day calibration (round-16): a FIXED Spark job-floor probe
+    * (dispatch + codegen-cached in-memory agg, zero IO) recorded with
+    * every run, so cross-round ratio moves can be normalized
+    * arithmetically against its drift instead of adjudicated by
+    * worktree A/B prose. min of 6 — the first run pays codegen. */
+  def calibSparkFloor(spark: SparkSession): Double =
+    (1 to 6).map { _ =>
+      val t0 = System.nanoTime()
+      spark.range(1L << 22).selectExpr("sum(id * 31) as s")
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }.min
+
+  /** Write a one-line JSON record; never fail a minutes-long run on the
+    * file write — stdout already carries the record. */
+  def writeRecord(out: String, json: String): Unit =
+    try {
+      val p = java.nio.file.Paths.get(out)
+      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(p, (json + "\n").getBytes("UTF-8"))
+    } catch {
+      case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write $out: $e")
     }
+
+  def main(args: Array[String]): Unit = {
+    val spark = Engine.session()
     // JVM/codegen warmup: one FULL untimed pass, so every timed sample
     // measures steady state. Three light warmup queries were not
     // enough: the md5-heavy dedup pipelines take ~2 executions before
@@ -62,7 +73,7 @@ object Bench {
     // thousands of queries; the ramp is a per-JVM constant, not query
     // cost.
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    for ((name, fn) <- ordered) runOne(name, fn)
+    for ((name, fn) <- ordered) runOne(spark, sfDir, name, fn)
     // INTERLEAVED passes: run the FULL query list twice (a third pass
     // only for queries whose 2-pass min exceeds 1 s — exactly where a GC
     // pause or load spike distorts a 2-sample min), report the per-query
@@ -79,7 +90,7 @@ object Bench {
     def timedRun(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Boolean, Double) = {
       val t0 = System.nanoTime()
-      val ok = runOne(name, fn)
+      val ok = runOne(spark, sfDir, name, fn)
       (ok, (System.nanoTime() - t0) / 1e9)
     }
     val samples = scala.collection.mutable.Map.empty[String, Vector[(Boolean, Double)]]
@@ -97,34 +108,14 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // machine-day calibration (round-16): a FIXED Spark job-floor probe
-    // (dispatch + codegen-cached in-memory agg, zero IO) recorded with
-    // every run, so cross-round ratio moves can be normalized
-    // arithmetically against its drift instead of adjudicated by
-    // worktree A/B prose. min of 6 — the first run pays codegen.
-    val calibSparkFloor = (1 to 6).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(1L << 22).selectExpr("sum(id * 31) as s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    val calibSparkFloor = Bench.calibSparkFloor(spark)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","calib_spark_floor":$calibSparkFloor,"queries":$qs,"sf":"$sfDir"}"""
     println(json)
     // ALSO write the record to a file: the driver captures a stdout
     // TAIL, and with ~100 queries the one-line JSON blob can straddle
     // the cut (round 7 lost 23 of 95 per-query entries that way). The
     // file is the durable, parseable record.
-    // never fail the whole (minutes-long) bench on the file write —
-    // stdout above already carries the record
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try {
-      val p = java.nio.file.Paths.get(out)
-      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(p, (json + "\n").getBytes("UTF-8"))
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(s"[bench] could not write $out: $e")
-    }
+    writeRecord(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"), json)
     spark.stop()
   }
 }

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory with the engine's scale-oriented defaults.
+/** SparkSession factory with the engine's scale-oriented defaults — the
+  * ONE place a session is built (ToolingSpec pins it; ExtensionsSmoke is
+  * the lone exemption, it must inject GraftExtensions at build time).
   *
   * Design stance (SURVEY.md §7.0): one SparkSession-centric engine where
   * batch and streaming share the same DataFrame operator definitions. The
@@ -17,47 +19,41 @@ import org.apache.spark.sql.SparkSession
   *     `broadcast()` where we know the dimension is small at any SF.
   */
 object Engine {
-  def session(master: String = "local[*]", shufflePartitions: Int = 32,
-      rocksDbState: Boolean = false): SparkSession = {
-    val builder = SparkSession.builder()
+  /** Local cores the mains run on: SPARK_GRAFT_CPUS, else the machine's
+    * cores. Never a fixed number — a forgotten override must not
+    * silently produce 4-core numbers that read as query regressions
+    * (round-5 lesson), nor oversubscribe a small box with 32 threads. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def session(master: String = s"local[$cpus]",
+      shufflePartitions: Int = cpus): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI on is the Spark 4 default; pinned so the engine's declared
-      // error semantics (fail loudly on bad casts/overflow; operators
-      // that must be total guard explicitly — see TextOps/SimSearch/
-      // parseCsv) don't drift with deployment defaults.
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // partitioned-index lookups (bands/fps/grams bucket dirs) list
-      // their dirs at EVERY read; the default threshold (32) launches a
-      // one-task-per-dir discovery JOB for any index over 32 buckets —
-      // pure dispatch overhead at micro-batch cadence. Driver-side
-      // listing is faster up to ~1k dirs on any filesystem with sane
-      // metadata; the index layouts cap at 65536 buckets, where the
-      // parallel job is again the right call.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.ui.enabled", "false")
-    // Large streaming state (big windows, wide Top-N key spaces) should
-    // live off-heap: the RocksDB provider spills to local disk instead of
-    // holding every version in executor memory. transformWithState
-    // requires it; flatMapGroupsWithState benefits from it.
-    if (rocksDbState) builder.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
+      // STATIC conf (builder-only): the generated-class cache defaults
+      // to 100 entries, but one interleaved pass over all declared
+      // queries compiles several codegen units each — by the time pass
+      // 2 reaches a query, pass 1's classes are evicted and EVERY timed
+      // sample re-pays Janino compilation (~40% uniform inflation,
+      // round-4 finding). A deployment reuses compiled plans.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
+    tune(spark)
   }
 
-  /** Apply the engine defaults to an externally created session (the
-    * driver's Verify/Bench mains create their own). Safe to call on a
-    * running session: all of these are runtime-mutable SQL confs. */
+  /** The engine's runtime SQL confs, listed once: [[session]] applies
+    * them, and so can a session created elsewhere (the test suite's
+    * shared session, SparkEntry.entry's caller). Safe to call on a
+    * running session: all of these are runtime-mutable. */
   def tune(spark: SparkSession): SparkSession = {
+    // ANSI on is the Spark 4 default; pinned so the engine's declared
+    // error semantics (fail loudly on bad casts/overflow; operators
+    // that must be total guard explicitly — see TextOps/SimSearch/
+    // parseCsv) don't drift with deployment defaults.
     spark.conf.set("spark.sql.ansi.enabled", "true")
     // TIMESTAMP(NANOS) parquet columns (events table) read as raw longs
     // engine-wide; Tables.events owns the ns→µs conversion. Declared here
@@ -67,7 +63,13 @@ object Engine {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // see session(): keep index-dir discovery driver-side up to 1k dirs
+    // partitioned-index lookups (bands/fps/grams bucket dirs) list
+    // their dirs at EVERY read; the default threshold (32) launches a
+    // one-task-per-dir discovery JOB for any index over 32 buckets —
+    // pure dispatch overhead at micro-batch cadence. Driver-side
+    // listing is faster up to ~1k dirs on any filesystem with sane
+    // metadata; the index layouts cap at 65536 buckets, where the
+    // parallel job is again the right call.
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     spark
   }

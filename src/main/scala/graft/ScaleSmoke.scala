@@ -1,37 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
-
-/** Per-probe stage-metric tally: total shuffle write bytes, the largest
-  * single-stage shuffle write (the "peak shuffle" a 100 TB exchange
-  * would have to carry, scaled), and disk spill. Stage events arrive on
-  * the listener bus after the action returns, so the harness DRAINS the
-  * bus (GraftListenerDrain.waitUntilEmpty) before resetting and before
-  * sampling — a fixed sleep let late events from a prior probe bleed
-  * across tallies (round-16 ADVICE). */
-private final class ProbeMetrics extends SparkListener {
-  val shufWrite = new AtomicLong
-  val shufWritePeakStage = new AtomicLong
-  val diskSpill = new AtomicLong
-  override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-    val m = ev.stageInfo.taskMetrics
-    if (m != null) {
-      val w = m.shuffleWriteMetrics.bytesWritten
-      shufWrite.addAndGet(w)
-      shufWritePeakStage.getAndAccumulate(w, math.max(_, _))
-      diskSpill.addAndGet(m.diskBytesSpilled)
-    }
-  }
-  def reset(): Unit = {
-    shufWrite.set(0); shufWritePeakStage.set(0); diskSpill.set(0)
-  }
-}
 
 /** Scale-stress smoke: run the LSH dedup pipelines over the documents
   * table amplified k× and report wall-clock, to demonstrate the
@@ -96,32 +68,23 @@ object ScaleSmoke {
     val ks = args.drop(1).headOption.getOrElse("1,4,16").split(",").map(_.toInt)
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    Engine.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val base = graft.sources.Tables.documents(spark, dir)
     base.count() // warm
-    val metrics = new ProbeMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    // per-probe shuffle write, largest single-stage write (what a 100 TB
+    // exchange would carry, scaled) and spill — read shuffle GROWTH in k
+    val metrics = Profile.attach(spark)
 
     for (k <- ks) {
       val docs = amplify(base, k)
       def run(label: String, df: => DataFrame): Unit = {
         if (only.exists(!_.contains(label))) return
-        org.apache.spark.GraftListenerDrain.drain(spark.sparkContext)
-        metrics.reset()
-        val t0 = System.nanoTime()
-        val n = df.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // flush all pending stage events before sampling the tally
-        org.apache.spark.GraftListenerDrain.drain(spark.sparkContext)
+        val (n, dt, t) = Profile.measure(spark, metrics)(df.count())
         val gb = 1024.0 * 1024 * 1024
         println(f"[scale] k=$k%-3d $label%-14s ${dt}%7.1f s   rows=$n   " +
-          f"shufW=${metrics.shufWrite.get / gb}%.2f GiB " +
-          f"(peak stage ${metrics.shufWritePeakStage.get / gb}%.2f) " +
-          f"spill=${metrics.diskSpill.get / gb}%.2f GiB")
+          f"shufW=${t.shuffleWrite / gb}%.2f GiB " +
+          f"(peak stage ${t.shuffleWritePeakStage / gb}%.2f) " +
+          f"spill=${t.spill / gb}%.2f GiB")
       }
       run("near_dup", Dedup.nearDupPairs(docs))
       run("simhash", Dedup.simhashPairs(docs))
@@ -481,8 +444,8 @@ object ScaleSmoke {
       // probes above hand e2eCorpusOf the 64-branch generator
       // EXPRESSION, which every stage's lineage re-evaluates — at
       // k=64 the composition re-runs the per-row hash generation many
-      // times over (ProfileE2e2 showed the operators themselves
-      // sublinear once inputs materialize: encode join 3.0 → 9.8 s,
+      // times over (with inputs materialized the operators themselves
+      // read sublinear, BENCH_NOTES round 16: encode join 3.0 → 9.8 s,
       // pack 0.9 → 1.9 s for 16×→64×). A real pipeline reads its
       // corpus from parquet; this probe writes the survivable corpus
       // to parquet UNTIMED and times the composition over the file

@@ -1,25 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: sbt "runMain graft.Verify <sfDir> <outDir> [q_name ...]"
+  * Trailing names restrict the dump to those queries (oracle_sql.json
+  * is still written in full); compare just them with
+  * `tools/check_oracle.py <outDir> <sfDir> --only q_name ...`. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2,
+      "usage: graft.Verify <sfDir> <outDir> [q_name ...]")
     val (Array(sfDir, outDir), only) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString) // match Bench's default
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(spark) // same declared confs as Bench (ANSI, AQE, UTC, nanos)
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Engine.session()
     new java.io.File(outDir).mkdirs()
-    // dev filter: trailing args restrict the dump to named queries
-    // (oracle_sql.json is still written in full — check_oracle --only
-    // narrows the compare side)
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }

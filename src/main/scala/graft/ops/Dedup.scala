@@ -239,7 +239,7 @@ object Dedup {
     * in-row, no exchange). */
   def tokens(docs: DataFrame): DataFrame = explodeToks(tokArrays(docs))
 
-  private[graft] def explodeToks(tokArr: DataFrame): DataFrame =
+  private def explodeToks(tokArr: DataFrame): DataFrame =
     tokArr.select(col("doc_id"), explode(col("toks")).as("token"))
 
   /** Exact dedup on whitespace-normalized lowercase text: keep min doc_id
@@ -557,7 +557,8 @@ object Dedup {
     * from what the index already holds (same contract as the lookup). */
   // The band index's one-int meta, memoized per (session, dir): the raw
   // `.first()` is a full Spark job — ~0.5 s of every incremental
-  // lookup's fixed floor (IncrLab). Shared [[MetaMemo]] discipline.
+  // lookup's fixed floor (BENCH_NOTES round 8, q_line_dedup_incr).
+  // Shared [[MetaMemo]] discipline.
   private val bandMeta = new MetaMemo[String, Int]
 
   private[ops] def readBandBuckets(spark: org.apache.spark.sql.SparkSession,
@@ -1113,7 +1114,7 @@ object Dedup {
 
   /** (fpBuckets, k, w), memoized per (session, dir) — the raw `.first()`
     * is a full Spark job, the same fixed floor the band/span meta memos
-    * shave (IncrLab). Shared [[MetaMemo]] discipline. */
+    * shave (BENCH_NOTES round 8). Shared [[MetaMemo]] discipline. */
   private val winnowMeta = new MetaMemo[String, (Int, Int, Int)]
 
   private def readWinnowMeta(spark: org.apache.spark.sql.SparkSession,
@@ -1333,13 +1334,6 @@ object Dedup {
     shinglesOf(evalDocs.select(col("doc_id"), col("text")), n)
       .agg(sort_array(collect_set(col("shingle"))).as("eval_sh"))
 
-  // dev-lab seams (CleanLab) for the private in-row contamination pieces
-  def shingleArrayTestSeam(text: org.apache.spark.sql.Column, n: Int,
-      spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column =
-    shingleArrayExpr(text, n, spark)
-  def evalShingleRowTestSeam(evalDocs: DataFrame): DataFrame =
-    evalShingleRow(evalDocs)
-
   def contamination(docs: DataFrame, evalDocs: DataFrame, n: Int = 8): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     val evalSh = evalDocs.select(col("doc_id"), col("text"))
@@ -1400,8 +1394,8 @@ object Dedup {
     // EXPRESSION): staging the array through a named column and
     // exploding the column re-evaluates the ~300-hash array per
     // EXPLODED row once anything downstream references it — measured
-    // 12× the whole query (BloomLab: 6.1 s vs 0.49 s for the identical
-    // explode+count).
+    // 12× the whole query (6.1 s vs 0.49 s for the identical
+    // explode+count; BENCH_NOTES "Findings of the removed dev labs").
     // Two passes because the containment DENOMINATOR counts a doc's
     // shingles BEFORE any pruning: pass 1 is the count-only aggregate
     // (never touches join machinery); pass 2 sends only the bloom's

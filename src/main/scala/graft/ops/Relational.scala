@@ -176,8 +176,8 @@ object Relational {
     * bucket, parallelizing the decimal partials. This is the shape a
     * deployment reads anyway (many row groups per table), so the twin
     * both proves the layout-independence of the answer and measures the
-    * aggregate without the single-file fixture floor (FloorLab's ~0.3 s
-    * per decimal sum is a one-task artifact, BENCH_NOTES r3/r9). */
+    * aggregate without the single-file fixture floor (the ~0.3 s per
+    * decimal sum is a one-task artifact, BENCH_NOTES r3/r9). */
   def aggGroupBucketed(spark: SparkSession, dir: String): DataFrame =
     spark.table(graft.sources.Bucketing.LineitemBkt)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -354,7 +354,7 @@ object Relational {
     * partition's distinct values of that single column; the subtrees
     * are independent single-row frames, so their stages execute
     * concurrently. Measured 670 ms vs the melt's 1.3–1.7 s at sf0.1
-    * (ProfLab). Multi-column count_distinct in ONE aggregate would
+    * (BENCH_NOTES "Findings of the removed dev labs"). Multi-column count_distinct in ONE aggregate would
     * instead plan an Expand feeding a sort-based aggregate over
     * |rows|×|cols| tuples — 6× slower — and the melt form
     * ([[profileMeltQ]]) pays struct-explode amplification before its
@@ -399,8 +399,8 @@ object Relational {
     * values with counts — map-side partials collapse low-cardinality
     * columns before the shuffle — then fold per-value rows into
     * per-column stats) amortizes better than N subtree scans. At the
-    * declared 6-column profile the split form wins (ProfLab: 670 ms vs
-    * 1.3 s at sf0.1); both emit identical rows on non-empty input (the
+    * declared 6-column profile the split form wins (670 ms vs 1.3 s at
+    * sf0.1, BENCH_NOTES "Findings of the removed dev labs"); both emit identical rows on non-empty input (the
     * melt emits zero rows on an empty table, the split form — like the
     * SQL oracle — emits one all-null/zero row per column). */
   def profileMeltQ(spark: SparkSession, dir: String): DataFrame = {

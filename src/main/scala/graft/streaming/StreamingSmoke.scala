@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable end-to-end smoke for the streaming layer:
   * `sbt "runMain graft.streaming.StreamingSmoke <inDir>"`.
   *
@@ -14,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 object StreamingSmoke {
   def main(args: Array[String]): Unit = {
     val inDir = args.headOption.getOrElse("/tmp/drive/jobB_in")
-    val spark = graft.Engine.session("local[4]", shufflePartitions = 4)
+    val spark = graft.Engine.session()
     import spark.implicits._
 
     val lines = spark.readStream.option("maxFilesPerTrigger", "1").text(inDir)

@@ -37,14 +37,14 @@ object CacheAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = Lab.session()
-    val sfDir = Lab.sfDir
+    val spark = graft.Engine.session()
+    val sfDir = graft.Bench.sfDir
     val names =
       if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     var flagged = 0
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      Lab.noop(df)
+      df.write.format("noop").mode("overwrite").save()
       val scans = externalScans(df.queryExecution.executedPlan)
       val byPath = scans
         .groupBy(_.relation.location.rootPaths.mkString(","))

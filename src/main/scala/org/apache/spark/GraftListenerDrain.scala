@@ -1,7 +1,7 @@
 package org.apache.spark
 
 /** Accessor for the private[spark] listener-bus drain — the measurement
-  * harnesses (graft.ScaleSmoke's ProbeMetrics) must flush all pending
+  * collector (graft.Profile.Collector) must flush all pending
   * SparkListenerStageCompleted events between probes; fixed sleeps let
   * a prior probe's late events bleed into the next tally (round-16
   * ADVICE). Same-package shim, no Spark internals copied. */
